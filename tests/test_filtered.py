@@ -187,23 +187,20 @@ def test_light_query_stays_single_task(spark, filter_index):
 def test_merge_shuffle_is_k_rows_per_segment(spark, filter_index):
     """The per-(query, segment) stage emits ≤ k rows each — the global
     merge moves O(segments·k) rows, not O(postings)."""
-    from theoremsearch_spark.query import _GROUP_SCHEMA, _score_group, load_index_meta
+    from theoremsearch_spark.query import _GROUP_SCHEMA, IndexView, _score_group
 
     idx = f"{filter_index}/index"
-    meta = load_index_meta(spark, idx)
-    tstats = spark.read.parquet(f"{idx}/term_stats").toPandas()
     qs = pd.DataFrame({"query_id": [0], "query_text": ["the w00500"]})
-    qterm = _build_qterms(qs, tstats, [], SALT, NSEG)
+    prep = IndexView.open(idx).prepare(spark, qs)
+    stats = dict(n_docs=prep.n_docs, avgdl=prep.avgdl, k1=prep.k1, b=prep.b)
+    qterm = _build_qterms(qs, prep.tstats, [], SALT, NSEG)
     blocks = spark.read.parquet(f"{idx}/postings").filter(
         F.col("term_id").isin([int(x) for x in qterm["term_id"].unique()])
     )
     fan = _fan(spark, blocks, qterm, SALT)
 
     def score(key, pdf):
-        return _score_group(
-            pdf, n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
-            k1=float(meta["k1"]), b=float(meta["b"]), k=K,
-        )
+        return _score_group(pdf, k=K, **stats)
 
     part = fan.groupBy("query_id", "serve_seg").applyInPandas(score, schema=_GROUP_SCHEMA)
     n = part.count()

@@ -588,7 +588,7 @@ def test_tombstone_artifact_is_executor_packed(spark, upsert_index):
     distinct tombstoned ids, and carry the exact doc_len sum — no
     Row-per-tombstone driver collect."""
     from theoremsearch_spark.codec import PackedDocIdSet
-    from theoremsearch_spark.streaming.incremental import _tombstone_artifact
+    from theoremsearch_spark.query import _tombstone_artifact
 
     out = upsert_index["out"]
     dead = spark.read.parquet(f"{out}/gen_1/tombstones").dropDuplicates(["doc_id"])

@@ -100,7 +100,7 @@ class PackedDocIdSet:
     """A sorted doc_id set as delta+varbyte chunks — the broadcastable
     tombstone-mask artifact for upsert/delete serving.
 
-    Built EXECUTOR-side (streaming/incremental._tombstone_artifact):
+    Built EXECUTOR-side (query._tombstone_artifact):
     each task packs its sorted ids into one chunk, so the driver only
     ever receives ~1.2 compressed bytes per id (no Row-per-id collect —
     at 10^8 tombstones that is ~120 MB of blobs vs ~800 MB of int64

@@ -895,7 +895,7 @@ def _tombstone_mask_artifact(tomb: DataFrame):
     into two binary buffers; the driver receives one compact blob per
     partition — never a Row per tombstone — and merge-sorts the
     O(churn) arrays. The vector-store analog of the text engine's
-    PackedDocIdSet serve prep (streaming/incremental._tombstone_artifact):
+    PackedDocIdSet serve prep (query._tombstone_artifact):
     broadcast ONCE by the chunked server, shared by every chunk."""
 
     def pack(batches):
@@ -993,7 +993,7 @@ def ann_ivf_search(
     `_prep`: (meta, tombstones) computed ONCE by
     `ann_ivf_search_batched` and shared across its chunks — the
     serve-prep-runs-once discipline the text side's chunked serving
-    established (topk_all_generations max_batch). The tombstone slot is
+    established (query.IndexView.prepare). The tombstone slot is
     either a DataFrame (joined JVM-side) or a BROADCAST of the packed
     (ids, upto_gen) arrays (`_tombstone_mask_artifact`) — packed once,
     shipped once, decoded once per executor; never re-localized per
@@ -1100,8 +1100,7 @@ def ann_ivf_search(
 
 def ann_ivf_search_batched(
     spark, out_dir: str, queries_pdf, k: int = 10, *,
-    max_batch: int = 0, chunk_times: list | None = None,
-    max_inflight: int = 2, **search_kwargs,
+    max_batch: int = 0, chunk_times: list | None = None, **search_kwargs,
 ) -> DataFrame:
     """Serve a large ANN query batch in bounded chunks of `max_batch`
     queries — the vector-side analog of `query.topk_batched`: the
@@ -1125,39 +1124,20 @@ def ann_ivf_search_batched(
     bench.py derives real serving-latency p50/p95 from these."""
     if not max_batch or len(queries_pdf) <= max_batch:
         return ann_ivf_search(spark, out_dir, queries_pdf, k=k, **search_kwargs)
-    import time
+    from theoremsearch_spark.query import run_chunked
 
     meta = _read_ivf_meta(out_dir)
     tomb = _visible_tombstones(spark, out_dir, int(meta["generations"]))
     mask = _tombstone_mask_artifact(tomb) if tomb is not None else None
     mask_bc = spark.sparkContext.broadcast(mask) if mask is not None else None
 
-    def run_chunk(chunk):
-        t0 = time.monotonic()
-        res = ann_ivf_search(
+    return run_chunked(
+        spark, queries_pdf, max_batch,
+        lambda chunk: ann_ivf_search(
             spark, out_dir, chunk, k=k, _prep=(meta, mask_bc), **search_kwargs,
-        )
-        return res.schema, res.toPandas(), time.monotonic() - t0
-
-    # up to max_inflight chunk jobs in flight (guide §2.6 — the next
-    # chunk back-fills the current chunk's task tail); order-preserving
-    # map keeps re-assembly deterministic and the co-resident working
-    # set bounded by max_inflight chunks
-    from concurrent.futures import ThreadPoolExecutor
-
-    chunks = [
-        queries_pdf.iloc[i : i + max_batch]
-        for i in range(0, len(queries_pdf), max_batch)
-    ]
-    parts = []
-    schema = None
-    with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool:
-        for sch, pdf, dt in pool.map(run_chunk, chunks):
-            schema = sch
-            parts.append(pdf)
-            if chunk_times is not None:
-                chunk_times.append(dt)
-    return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=schema)
+        ),
+        chunk_times,
+    )
 
 
 def ann_rescored_topk(

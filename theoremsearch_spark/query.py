@@ -53,9 +53,19 @@ pushdown paths, both applied before any scoring:
 
 Both prune at the block level too: blocks whose [first_doc, last_doc]
 range contains no allowed doc are never decoded.
+
+This module is the ONE serving stack. Everything above runs over an
+`IndexView` — a list of index generations: a batch-built index is the
+one-generation view with no tombstones, a streamed root
+(streaming.incremental, which only ingests, commits, deletes, compacts
+and vacuums) is every live generation under merged, tombstone-corrected
+statistics. Chunking (`run_chunked`), phrase verification and doc
+lookup (`_pruned_doc_meta`, `_pruned_doc_meta_pool`) each exist once.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -455,17 +465,6 @@ def _exact_rescore(
     return pd.DataFrame({"query_id": qid, "doc_id": ids[o], "score": sc[o]})
 
 
-def load_index_meta(spark: SparkSession, index_dir: str) -> dict:
-    from theoremsearch_spark.stats import read_doc_stats_row
-
-    keys = ("n_docs", "avgdl", "k1", "b", "n_segments", "salt_threshold")
-    row = read_doc_stats_row(f"{index_dir}/doc_stats")
-    if row is None:  # non-local path — fall back to a Spark read
-        srow = spark.read.parquet(f"{index_dir}/doc_stats").collect()[0]
-        return {k: srow[k] for k in keys if k in srow.__fields__}
-    return {k: row[k] for k in keys if k in row}
-
-
 def _normalize_filters(filters) -> list[list[str]]:
     """filters: list of conjunctive groups; each group a term (AND) or a
     list of terms (OR-of-terms within the group)."""
@@ -579,27 +578,17 @@ def _fan(spark: SparkSession, blocks: DataFrame, qterm: pd.DataFrame, salt_thres
 
 def topk_frames(
     spark: SparkSession,
-    blocks: DataFrame,
-    tstats: pd.DataFrame,
+    prep: ServePrep,
     queries: pd.DataFrame,
     *,
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
     k: int = 10,
     filters=None,
     allowed_docs=None,
-    excluded_docs=None,
-    salt_threshold: int | None = None,
-    n_segments: int = 1,
     mode: str = "or",
     not_terms: list[str] | None = None,
     rank: bool = True,
 ) -> DataFrame:
-    """Batch top-k over explicit frames: `blocks` = posting blocks
-    (possibly a union of index generations), `tstats` = pandas term
-    dictionary (term, term_id, df) already merged across generations.
+    """One scoring job: batch top-k over a view's serve-prep.
 
     `rank=False` (k <= 0 only) returns the UNRANKED candidate pool
     (query_id, doc_id, score) — no global window: the k=0 conjunctive
@@ -618,16 +607,13 @@ def topk_frames(
     MUST-NOT terms — docs containing any of them are excluded before
     scoring, both modes.
 
-    `excluded_docs`: doc_ids of tombstoned (superseded) document
-    versions — an id iterable or a `codec.PackedDocIdSet` (compressed
-    executor-built artifact) — dropped at decode time inside the
-    scorer. Callers are
-    responsible for passing CORRECTED global stats (n_docs, avgdl, and
-    per-term df in `tstats`) that exclude these docs; that is what
-    makes upsert serving score-identical to a from-scratch build over
-    the latest versions (topk_all_generations does this).
+    Tombstoned doc versions (`prep.excluded`, a broadcast
+    `codec.PackedDocIdSet`) are dropped at decode time inside the
+    scorer; the prep's N, avgdl and df already exclude them, which is
+    what makes upsert serving score-identical to a from-scratch build
+    over the latest versions.
 
-    With `n_segments > 1` + `salt_threshold`, heavy-term queries are
+    With `n_segments > 1` + a salt threshold, heavy-term queries are
     segment-sharded (see module docstring); the per-query group shuffle
     then moves O(segments·k) result rows, never whole posting lists."""
     if mode not in ("or", "and"):
@@ -637,10 +623,11 @@ def topk_frames(
     if not rank and k > 0:
         raise ValueError("rank=False is the k <= 0 candidate-pool shape")
     fgroups = _normalize_filters(filters)
+    salt_threshold = prep.salt_threshold
     if salt_threshold is None:
         salt_threshold = 2**62  # nothing is heavy → single-task queries
     qterm = _build_qterms(
-        queries, tstats, fgroups, salt_threshold, n_segments, not_terms=not_terms
+        queries, prep.tstats, fgroups, salt_threshold, prep.n_segments, not_terms=not_terms
     )
     if qterm is None:
         return spark.createDataFrame(
@@ -657,42 +644,14 @@ def topk_frames(
             )
         allowed_bc = spark.sparkContext.broadcast(arr)
 
-    excluded_bc = None
-    if excluded_docs is not None:
-        from pyspark.broadcast import Broadcast
-
-        if isinstance(excluded_docs, Broadcast):
-            # pre-broadcast artifact: a chunked caller (topk_all_
-            # generations max_batch) broadcasts the tombstone mask ONCE
-            # and passes the handle to every chunk — re-broadcasting a
-            # shared artifact per chunk would accumulate driver+executor
-            # copies linearly with the chunk count
-            excluded_bc = excluded_docs
-        elif isinstance(excluded_docs, codec.PackedDocIdSet):
-            # compressed executor-built artifact (topk_all_generations):
-            # broadcast the ~1.2 B/id chunks; workers decode once per
-            # executor process (memoized on the broadcast-cached object)
-            if excluded_docs.n:
-                excluded_bc = spark.sparkContext.broadcast(excluded_docs)
-        else:
-            # ad-hoc id iterable: sorted-unique array, scorer masks via
-            # searchsorted. Bounded by upsert churn since the last
-            # compaction — heavy churn should compact, not grow this.
-            xarr = np.unique(np.asarray(list(excluded_docs), dtype=np.int64))
-            if xarr.size:
-                excluded_bc = spark.sparkContext.broadcast(xarr)
-
     # posting scan touches only the queried term_ids — an int64 IN-filter
     # pushed into the parquet row-group stats
-    blocks = blocks.filter(F.col("term_id").isin(ids))
+    blocks = prep.blocks.filter(F.col("term_id").isin(ids))
     fan = _fan(spark, blocks, qterm, salt_threshold)
+    # plain locals: the scoring closure must not capture the prep's frames
+    n_docs, avgdl, k1, b, excluded_bc = prep.n_docs, prep.avgdl, prep.k1, prep.b, prep.excluded
 
     def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        excl = None
-        if excluded_bc is not None:
-            excl = excluded_bc.value
-            if isinstance(excl, codec.PackedDocIdSet):
-                excl = excl.decode()  # once per worker process (memoized)
         return _score_group(
             pdf,
             n_docs=n_docs,
@@ -701,7 +660,9 @@ def topk_frames(
             b=b,
             k=k,
             allowed_global=None if allowed_bc is None else allowed_bc.value,
-            excluded_global=excl,
+            # decoded once per worker process (memoized on the
+            # broadcast-cached object)
+            excluded_global=None if excluded_bc is None else excluded_bc.value.decode(),
             mode=mode,
         )
 
@@ -725,7 +686,6 @@ def topk(
     *,
     filters=None,
     allowed_docs=None,
-    excluded_docs=None,
     k1: float | None = None,
     b: float | None = None,
     mode: str = "or",
@@ -733,8 +693,9 @@ def topk(
     rank: bool = True,
 ) -> DataFrame:
     """Batch top-k: queries pandas(query_id, query_text) → Spark DF of
-    (query_id, rank, doc_id, score). `rank=False` (k <= 0 pools only)
-    skips the global rank window — see topk_frames.
+    (query_id, rank, doc_id, score). `index_dir` is a batch index or a
+    generation root (see `IndexView.open`). `rank=False` (k <= 0 pools
+    only) skips the global rank window — see topk_frames.
 
     `mode="and"`: conjunctive serving — only docs containing EVERY
     query term qualify (still BM25-scored and ranked). `not_terms`:
@@ -745,91 +706,487 @@ def topk(
     posting lists (each group a term or an OR-list) — reference R3.
     `allowed_docs`: explicit doc_id whitelist (broadcast), for ad-hoc
     predicates; combine freely with `filters`.
-    `excluded_docs`: doc_id blacklist (tombstones) — NOTE: stats are
-    NOT corrected here (single-index ad-hoc exclusion), so scores
-    differ from a rebuild over the survivors; a one-time warning is
-    emitted. For exact upsert semantics use topk_all_generations,
-    which corrects N/avgdl/df from the tombstone rows.
 
     k1/b overrides that differ from the index's build-time values are
     rejected: stored per-block `max_tf_norm` upper bounds are computed
     with the build parameters, and pruning with foreign k1/b could
     silently drop true top-k members."""
-    if excluded_docs is not None:
-        import warnings
-
-        warnings.warn(
-            "topk(excluded_docs=...) excludes docs WITHOUT correcting "
-            "N/avgdl/df — scores will differ from a rebuild over the "
-            "survivors; use topk_all_generations for exact upsert/delete "
-            "semantics",
-            stacklevel=2,
-        )
-    prep = _serve_prep(
-        spark, index_dir, queries, filters=filters, not_terms=not_terms,
-        k1=k1, b=b,
-    )
-    return topk_frames(
-        spark, prep["blocks"], prep["tstats"], queries,
-        k=k, filters=filters, allowed_docs=allowed_docs,
-        excluded_docs=excluded_docs, mode=mode, not_terms=not_terms,
-        rank=rank, **prep["frame_kwargs"],
+    return IndexView.open(index_dir).topk(
+        spark, queries, k, filters=filters, allowed_docs=allowed_docs,
+        k1=k1, b=b, mode=mode, not_terms=not_terms, rank=rank,
     )
 
 
-def _serve_prep(
+MAX_INFLIGHT = 2  # chunk jobs submitted at once (bounded_map)
+
+
+def bounded_map(spark: SparkSession, fn, items) -> list:
+    """Order-preserving map that keeps at most MAX_INFLIGHT calls
+    submitted: item i+MAX_INFLIGHT is submitted only once item i's
+    result has been taken, so a straggling early item never lets the
+    later ones pile up behind it (`ThreadPoolExecutor.map` submits
+    every item up front). Two Spark jobs in flight let the next job's
+    tasks back-fill executors freed by the current job's straggler
+    tail. Calls inherit the caller's Spark local properties (job group,
+    description), so their jobs are accounted to the caller."""
+    from collections import deque
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    run = inheritable_thread_target(spark)(fn)
+    out: list = []
+    pending: deque = deque()
+    with ThreadPoolExecutor(max_workers=MAX_INFLIGHT) as pool:
+        for item in items:
+            if len(pending) == MAX_INFLIGHT:
+                out.append(pending.popleft().result())
+            pending.append(pool.submit(run, item))
+        out.extend(f.result() for f in pending)
+    return out
+
+
+def run_chunked(
     spark: SparkSession,
-    index_dir: str,
     queries: pd.DataFrame,
-    *,
-    filters=None,
-    not_terms: list[str] | None = None,
-    k1: float | None = None,
-    b: float | None = None,
-) -> dict:
-    """Per-index serving state, loaded ONCE per batch: doc_stats
-    metadata and the term-dictionary rows for every term the batch (and
-    its filters / must-nots) touches, plus the lazy postings frame.
+    max_batch: int,
+    run,
+    chunk_times: list | None = None,
+) -> DataFrame:
+    """Serve a query batch through `run(chunk) -> DataFrame` in bounded
+    chunks of `max_batch` queries — one scoring job per chunk, chunk
+    results (k rows/query, tiny) concatenated into one local-relation
+    DataFrame. `max_batch=0` (or a batch that fits) is one lazy call.
 
-    The doc_stats metadata is a driver-side pyarrow read (zero Spark
-    jobs), so prep costs exactly ONE job — the term-dictionary scan.
-    Chunked serving (`topk_batched`) calls this once for the WHOLE
-    batch and reuses the result for every chunk, so serve prep is O(1)
-    in the chunk count — the same serve-prep-runs-once discipline
-    topk_all_generations and ann_ivf_search_batched already follow."""
-    all_terms = sorted({t for q in queries["query_text"] for t in tokenize(q)})
-    for g in _normalize_filters(filters):
-        all_terms.extend(g)
-    all_terms.extend(not_terms or [])
+    Why chunking exists: the scorer's working set (posting blocks ×
+    queries in flight) grows linearly with the batch while per-core
+    heap is fixed, so on a PACKED executor the wide side of a cluster
+    degrades first — measured on the pinned 1→4-core protocol: N→4N
+    serving efficiency 0.805 at 292 queries vs 0.703 at 584
+    (BENCH/BASELINE.md round 4). Chunks are independent jobs with no
+    cross-chunk state, so results are bitwise identical to one big
+    batch, and stragglers and retries are contained per chunk. At most
+    MAX_INFLIGHT chunks are submitted at once (`bounded_map`), which
+    bounds the co-resident working set.
 
-    meta = load_index_meta(spark, index_dir)
-    tstats = (
-        spark.read.parquet(f"{index_dir}/term_stats")
-        .filter(F.col("term").isin(all_terms))
-        .toPandas()
+    `chunk_times` receives each chunk's measured wall seconds, taken
+    under that concurrency (bench.py derives serving-latency p50/p95
+    from them)."""
+    if not max_batch or len(queries) <= max_batch:
+        return run(queries)
+    import time
+
+    def timed(chunk: pd.DataFrame):
+        t0 = time.monotonic()
+        df = run(chunk)
+        return df.schema, df.toPandas(), time.monotonic() - t0
+
+    parts = bounded_map(
+        spark, timed,
+        [queries.iloc[i : i + max_batch] for i in range(0, len(queries), max_batch)],
     )
-    if k1 is not None and abs(float(k1) - float(meta["k1"])) > 1e-12:
-        raise ValueError(
-            f"k1={k1} differs from index build k1={meta['k1']}; "
-            "block-max pruning bounds would be unsound — rebuild the index"
+    if chunk_times is not None:
+        chunk_times.extend(dt for _, _, dt in parts)
+    return spark.createDataFrame(
+        pd.concat([pdf for _, pdf, _ in parts], ignore_index=True), schema=parts[0][0]
+    )
+
+
+@dataclass(frozen=True)
+class ServePrep:
+    """Per-batch serving state, loaded ONCE per batch (chunked serving
+    reuses it for every chunk): global BM25 statistics, the term
+    dictionary rows of every term the batch touches, the lazy posting
+    block frame, and the broadcast tombstone mask (None when no doc is
+    dead)."""
+
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    n_segments: int
+    salt_threshold: int | None
+    tstats: pd.DataFrame
+    blocks: DataFrame
+    excluded: object = None
+
+
+@dataclass(frozen=True)
+class IndexView:
+    """What serving reads, as a list of generations. A batch-built
+    index (plus its docs / positions dirs) is the one-generation view
+    with no tombstones; a generation root (streaming.incremental) is
+    every live generation of its manifest, with the tombstones of every
+    generation. Opening a view is driver-side file listing only — zero
+    Spark jobs."""
+
+    index_dirs: list
+    docs_dirs: list
+    positions_dirs: list
+    missing_positions: list = ()  # generations without a positions sidecar
+    tombstone_dirs: list = ()
+    gens: list | None = None  # manifest records (generation roots only)
+
+    @classmethod
+    def open(
+        cls, path: str, docs_dir: str | None = None, positions_dir: str | None = None
+    ) -> IndexView:
+        """`path` is a batch index dir (`docs_dir`/`positions_dir` name
+        its sidecars) or a generation root (a dir with a `gens/`
+        manifest), whose docs and positions come from its
+        generations."""
+        import os
+
+        if not os.path.isdir(f"{path}/gens"):
+            return cls(
+                [path], [docs_dir] if docs_dir else [],
+                [positions_dir] if positions_dir else [],
+            )
+        from theoremsearch_spark.streaming.incremental import (
+            _docs_path,
+            _generations,
+            _tombstone_paths,
         )
-    if b is not None and abs(float(b) - float(meta["b"])) > 1e-12:
-        raise ValueError(
-            f"b={b} differs from index build b={meta['b']}; "
-            "block-max pruning bounds would be unsound — rebuild the index"
+
+        gens = sorted(_generations(None, path), key=lambda g: g["gen"])
+        if not gens:
+            raise ValueError(f"no committed generations under {path}")
+        # delete-only generations carry tombstones but no index
+        live = [g["gen"] for g in gens if not g.get("delete_only")]
+        if not live:
+            raise ValueError(f"only delete-only generations under {path}")
+        pos = [f"{path}/gen_{g}/index/positions" for g in live]
+        return cls(
+            [f"{path}/gen_{g}/index" for g in live],
+            [_docs_path(path, g) for g in live],
+            [p for p in pos if os.path.isdir(p)],
+            [p for p in pos if not os.path.isdir(p)],
+            _tombstone_paths(path, [g["gen"] for g in gens]),
+            gens,
         )
-    return {
-        "tstats": tstats,
-        "blocks": spark.read.parquet(f"{index_dir}/postings"),
-        "frame_kwargs": dict(
-            n_docs=int(meta["n_docs"]),
-            avgdl=float(meta["avgdl"]),
-            k1=float(meta["k1"]),
-            b=float(meta["b"]),
-            n_segments=int(meta.get("n_segments", 1) or 1),
-            salt_threshold=meta.get("salt_threshold"),
-        ),
-    }
+
+    def prepare(
+        self,
+        spark: SparkSession,
+        queries: pd.DataFrame,
+        *,
+        filters=None,
+        not_terms: list[str] | None = None,
+        k1: float | None = None,
+        b: float | None = None,
+    ) -> ServePrep:
+        """The batch's serve-prep. doc_stats is a driver-side pyarrow
+        read (zero Spark jobs), so a one-generation view without
+        tombstones costs exactly ONE job — the term-dictionary scan —
+        and builds the plain single-index plan: stored avgdl, the
+        df-vs-threshold salting rule, no generation column."""
+        terms = sorted({t for q in queries["query_text"] for t in tokenize(q)})
+        for g in _normalize_filters(filters):
+            terms.extend(g)
+        # must-not terms need their stats rows too — without them the
+        # qterm merge would silently drop the exclusion
+        terms.extend(not_terms or [])
+        if self.gens is not None:
+            _check_filter_cols(self.gens, filters)
+        metas = _doc_stats(spark, self.index_dirs)
+        build = {"k1": float(metas[0]["k1"]), "b": float(metas[0]["b"])}
+        for name, want in (("k1", k1), ("b", b)):
+            if want is not None and abs(float(want) - build[name]) > 1e-12:
+                raise ValueError(
+                    f"{name}={want} differs from index build {name}={build[name]}; "
+                    "block-max pruning bounds would be unsound — rebuild the index"
+                )
+        if len(self.index_dirs) > 1 or self.tombstone_dirs:
+            return self._prepare_generations(spark, metas, terms, **build)
+        idx, m = self.index_dirs[0], metas[0]
+        return ServePrep(
+            n_docs=int(m["n_docs"]),
+            avgdl=float(m["avgdl"]),
+            n_segments=int(m.get("n_segments", 1) or 1),
+            salt_threshold=m.get("salt_threshold"),
+            tstats=spark.read.parquet(f"{idx}/term_stats")
+            .filter(F.col("term").isin(terms))
+            .toPandas(),
+            blocks=spark.read.parquet(f"{idx}/postings"),
+            **build,
+        )
+
+    def _prepare_generations(
+        self, spark: SparkSession, metas: list[dict], terms: list[str], k1: float, b: float
+    ) -> ServePrep:
+        """Serve-prep across generations with globally merged
+        statistics (N, avgdl, df), so scores are identical to a
+        from-scratch build over the union corpus, and tombstone
+        corrections: a generation that re-ingested or deleted urls
+        tombstoned the older doc versions, which are excluded from
+        scoring while N, avgdl and per-term df are corrected as if they
+        were gone. The stored per-generation doc_stats stay stale until
+        compaction, standard LSM behavior.
+
+        O(1) Spark jobs regardless of generation count: a streamed root
+        accumulates one generation per micro-batch, so each table is
+        ONE multi-path scan with the generation id parsed from the file
+        path, never G per-generation reads."""
+        gen_ids = [int(g["gen"]) for g in self.gens if not g.get("delete_only")]
+        metas = dict(zip(gen_ids, metas))
+        n_docs = sum(m["n_docs"] for m in metas.values())
+        avgdl = sum(m["avgdl"] * m["n_docs"] for m in metas.values()) / n_docs
+        gen_col = F.regexp_extract(F.input_file_name(), r"gen_(-?\d+)/index", 1).cast("int")
+
+        # segment-sharded serving needs every generation to agree on the
+        # segment modulus (doc_id % S); mixed moduli fall back to the
+        # single-task path — correct, just unsharded. Saltedness is a
+        # PER-GENERATION property (each generation salted at its own df
+        # threshold), so the routing flag rides on the blocks.
+        seg_moduli = {int(m.get("n_segments") or 1) for m in metas.values()}
+        n_segments = seg_moduli.pop() if len(seg_moduli) == 1 else 1
+        thr = {
+            g: int(m["salt_threshold"]) if m.get("salt_threshold") is not None else 2**62
+            for g, m in metas.items()
+        }
+
+        # ONE term-dictionary scan: the per-generation rows of the
+        # batch's terms (|batch terms|·G — driver-tiny) yield BOTH the
+        # merged stats and the per-generation salted-routing flags
+        tstats_plan = (
+            spark.read.parquet(*[f"{d}/term_stats" for d in self.index_dirs])
+            .withColumn("gen", gen_col)
+            .filter(F.col("term").isin(terms))
+            .select("gen", "term", "term_id", "df")
+        )
+        # the tombstone artifact (mask + dead-doc df counts, one pass)
+        # and the dictionary scan are independent tiny jobs that leave
+        # most executor slots idle — run them concurrently
+        jobs = [tstats_plan.toPandas]
+        if self.tombstone_dirs:
+            dead = spark.read.parquet(*self.tombstone_dirs).dropDuplicates(["doc_id"])
+            jobs.append(lambda: _tombstone_artifact(dead, terms))
+        per_gen, *artifact = bounded_map(spark, lambda job: job(), jobs)
+        mask, dfc = None, {}
+        if artifact:
+            mask, n_dead, dl_dead, dfc = artifact[0]
+            if n_dead:
+                total_len = avgdl * n_docs - dl_dead
+                n_docs -= n_dead
+                avgdl = total_len / max(n_docs, 1)
+
+        per_gen["any_salted"] = per_gen["df"] > per_gen["gen"].map(thr)
+        merged = per_gen.groupby(["term", "term_id"], as_index=False).agg(
+            df=("df", "sum"), any_salted=("any_salted", "max")
+        )
+        merged["any_salted"] = merged["any_salted"].astype(bool)
+        if dfc:
+            # scoring df excludes dead docs; the any_salted ROUTING flag
+            # keeps the generations' own build-time df (saltedness is a
+            # physical layout property, not a statistic)
+            merged["df"] = merged["df"] - merged["term"].map(dfc).fillna(0).astype(int)
+
+        # block max_tf_norm was computed with the GENERATION's avgdl;
+        # tf_norm grows with avgdl by at most avgdl_serve/avgdl_gen, so
+        # rescaling by that ratio keeps block-max pruning sound under
+        # merged+corrected statistics
+        ub_info = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "gen": list(metas),
+                    "ub_scale": [max(1.0, avgdl / float(m["avgdl"])) for m in metas.values()],
+                }
+            )
+        )
+        salted_flags = spark.createDataFrame(
+            [(int(r.gen), int(r.term_id), bool(r.any_salted)) for r in per_gen.itertuples()],
+            "gen int, term_id long, is_salted boolean",
+        )
+        blocks = (
+            # recursiveFileLookup: multi-root partition discovery rejects
+            # the bucket=N postings dirs; serving never reads the bucket
+            # column (it filters on term_id, pushed to row-group stats)
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(*[f"{d}/postings" for d in self.index_dirs])
+            .withColumn("gen", gen_col)
+            .join(F.broadcast(ub_info), "gen")
+            .withColumn("max_tf_norm", (F.col("max_tf_norm") * F.col("ub_scale")).cast("float"))
+            .drop("ub_scale")
+            .join(F.broadcast(salted_flags), ["gen", "term_id"])
+        )
+        return ServePrep(
+            n_docs=int(n_docs), avgdl=float(avgdl), k1=k1, b=b,
+            n_segments=n_segments, salt_threshold=None, tstats=merged, blocks=blocks,
+            # broadcast ONCE per batch: every chunk's scoring job reads
+            # the same handle
+            excluded=None if mask is None else spark.sparkContext.broadcast(mask),
+        )
+
+    def topk(
+        self,
+        spark: SparkSession,
+        queries: pd.DataFrame,
+        k: int = 10,
+        *,
+        max_batch: int = 0,
+        chunk_times: list | None = None,
+        filters=None,
+        not_terms: list[str] | None = None,
+        k1: float | None = None,
+        b: float | None = None,
+        **score_kwargs,
+    ) -> DataFrame:
+        """Batch top-k (see `topk`), served in chunks of `max_batch`
+        queries (see `run_chunked`) over one shared serve-prep."""
+        prep = self.prepare(spark, queries, filters=filters, not_terms=not_terms, k1=k1, b=b)
+        return run_chunked(
+            spark, queries, max_batch,
+            lambda chunk: topk_frames(
+                spark, prep, chunk, k=k, filters=filters, not_terms=not_terms, **score_kwargs
+            ),
+            chunk_times,
+        )
+
+    def phrase_topk(
+        self,
+        spark: SparkSession,
+        queries: pd.DataFrame,
+        k: int = 10,
+        *,
+        filters=None,
+        text_col: str = "extracted_text",
+        snippet_pad: int | None = None,
+        use_positions: bool | None = None,
+    ) -> DataFrame:
+        """Exact-phrase top-k (see `phrase_topk`). `use_positions`:
+        None = positional verification when EVERY generation carries a
+        positions sidecar, True = require them (raises if any lacks
+        one — no silent strategy downgrade), False = doc-text verify."""
+        if use_positions is None:
+            use_positions = bool(self.positions_dirs) and not self.missing_positions
+        if use_positions and self.missing_positions:
+            raise ValueError(
+                f"positions sidecar missing for generation dirs {self.missing_positions}; "
+                "rebuild those generations with positions (or pass "
+                "use_positions=False) — a partial sidecar would silently "
+                "drop matches from the uncovered generations"
+            )
+        # the k=0 conjunctive pool stays DISTRIBUTED and unranked
+        # (verification re-ranks): for common-token phrases it is a
+        # corpus fraction, so it never localizes through the driver
+        cand = self.topk(spark, queries, k=0, mode="and", filters=filters, rank=False)
+        if not use_positions:
+            # two consumers (file pruning + verify join): one
+            # EXECUTOR-side materialization so scoring runs once. Lazy:
+            # the pruning aggregate triggers it — no extra job
+            cand = cand.localCheckpoint(eager=False)
+            docs = _pruned_doc_meta_pool(spark, self.docs_dirs, cand, [text_col])
+            return _verify_phrase(spark, cand, docs, queries, k, text_col, snippet_pad)
+        from theoremsearch_spark.positions import phrase_verify_positional
+
+        # single consumer: the pool flows straight into the verify join
+        ranked = phrase_verify_positional(spark, self.positions_dirs, cand, queries, k)
+        if snippet_pad is None:
+            return ranked
+        ranked = _localize_hits(spark, ranked)  # final k·Q rows — tiny
+        docs = _pruned_doc_meta(spark, self.docs_dirs, ranked, [text_col])
+        return (
+            ranked.join(docs, "doc_id")
+            .join(F.broadcast(_needles(spark, queries)), "query_id")
+            .withColumn("snippet", _snippet_expr(text_col, snippet_pad))
+            .select("query_id", "rank", "doc_id", "score", "snippet")
+        )
+
+
+def _check_filter_cols(gens: list[dict], filters) -> None:
+    """A generation that did not index a filter's posting list would
+    silently exclude ALL its docs from filtered results — reject when
+    the manifest RECORDS what was indexed and it doesn't cover the
+    filter (generations committed without the field are trusted to
+    have built their own filter_terms)."""
+    fkeys = {t.split("=", 1)[0] for g in _normalize_filters(filters) for t in g}
+    if not fkeys:
+        return
+    for g in gens:
+        fc = g.get("filter_cols")
+        if not g.get("delete_only") and fc is not None and not fkeys <= set(fc):
+            raise ValueError(
+                f"generation {g['gen']} indexed filter_cols={fc} but the "
+                f"query filters on {sorted(fkeys)} — filtered serving "
+                "would silently drop that generation's documents; "
+                "rebuild/compact with consistent filter_cols"
+            )
+
+
+def _doc_stats(spark: SparkSession, index_dirs: list[str]) -> list[dict]:
+    """Each index's one-row doc_stats sidecar, read DRIVER-side with
+    pyarrow (zero Spark jobs). Sidecars the local read cannot see
+    (non-local paths) come from ONE Spark read over all of them; a
+    sidecar with no row at all raises."""
+    from functools import reduce
+
+    from theoremsearch_spark.stats import read_doc_stats_row
+
+    rows = [read_doc_stats_row(f"{d}/doc_stats") for d in index_dirs]
+    todo = [i for i, r in enumerate(rows) if r is None]
+    if todo:
+        parts = [
+            spark.read.parquet(f"{index_dirs[i]}/doc_stats").withColumn("_i", F.lit(i))
+            for i in todo
+        ]
+        for r in reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts).collect():
+            row = r.asDict()
+            rows[row.pop("_i")] = row
+    empty = [d for d, r in zip(index_dirs, rows) if r is None]
+    if empty:
+        raise ValueError(f"doc_stats holds no row under {empty}")
+    return rows
+
+
+def _tombstone_artifact(dead: DataFrame, count_terms=None):
+    """ONE executor-side job over the (deduped) tombstone rows →
+    (PackedDocIdSet mask | None, n_dead, doc_len sum, {term: dead df}).
+    Each task sorts its own ids and packs one delta-varbyte chunk; the
+    driver receives one compressed blob + a handful of count rows PER
+    PARTITION — never a Row per tombstone.
+
+    `count_terms` (the batch's term set) folds the per-term dead-doc
+    df correction into the SAME pass: each task tallies its partition's
+    matching terms into a small dict (bounded by |batch terms|) emitted
+    as count rows."""
+    terms = set(count_terms or ())
+    cols = ["doc_id", "doc_len"] + (["terms"] if terms else [])
+
+    def pack(batches):
+        ids, dl = [], 0
+        cnt: dict[str, int] = {}
+        for pdf in batches:
+            ids.append(pdf["doc_id"].to_numpy(dtype="int64"))
+            dl += int(pdf["doc_len"].sum())
+            if terms:
+                for ts in pdf["terms"]:
+                    for t in ts:
+                        if t in terms:
+                            cnt[t] = cnt.get(t, 0) + 1
+        arr = np.concatenate(ids) if ids else np.empty(0, dtype="int64")
+        out = []
+        if arr.size:
+            arr.sort()
+            out.append(("", 0, int(arr.size), dl, codec.PackedDocIdSet.pack_sorted(arr)))
+        out.extend((t, c, 0, 0, None) for t, c in cnt.items())
+        if out:
+            yield pd.DataFrame(out, columns=["term", "cnt", "n", "dl", "packed"])
+
+    rows = (
+        dead.select(*cols)
+        .mapInPandas(pack, schema="term string, cnt long, n long, dl long, packed binary")
+        .collect()
+    )
+    dfc: dict[str, int] = {}
+    for r in rows:
+        if r["term"]:
+            dfc[r["term"]] = dfc.get(r["term"], 0) + int(r["cnt"])
+    mask_rows = [r for r in rows if r["n"]]
+    n = sum(int(r["n"]) for r in mask_rows)
+    if not n:
+        return None, 0, 0, {}
+    mask = codec.PackedDocIdSet([bytes(r["packed"]) for r in mask_rows], n)
+    return mask, n, sum(int(r["dl"]) for r in mask_rows), dfc
 
 
 def topk_batched(
@@ -840,82 +1197,16 @@ def topk_batched(
     *,
     max_batch: int = 0,
     chunk_times: list | None = None,
-    max_inflight: int = 2,
     **topk_kwargs,
 ) -> DataFrame:
-    """Serve a large query batch in bounded chunks of `max_batch`
-    queries — one scoring job per chunk, chunk results (k rows/query,
-    tiny) concatenated into one local-relation DataFrame. `max_batch=0`
-    = unchunked (plain topk).
-
-    `chunk_times`: optional list that receives each chunk's measured
-    wall seconds (bench.py derives the REAL serving-latency p50/p95
-    from these instead of estimating from total wall / Q).
-
-    Why this exists: the scorer's fan working set (posting blocks ×
-    queries) grows linearly with the batch while per-core heap is
-    fixed, so on a PACKED executor the wide side of a cluster degrades
-    first — measured on the pinned 1→4-core protocol: N→4N serving
-    efficiency 0.805 at 292 queries vs 0.703 at 584
-    (BENCH/BASELINE.md round 4). Chunking bounds the co-resident
-    working set; chunks are independent jobs with no cross-chunk state,
-    so stragglers and retries are contained per chunk. Results are
-    bitwise identical to one big batch: scoring is per-query, global
-    stats are batch-independent.
-
-    Serve prep (doc_stats metadata + the batch's term-dictionary rows)
-    runs ONCE for the whole batch, not once per chunk: the prep is
-    chunk-independent by construction (the term set is the union over
-    all queries; a chunk's _build_qterms merge simply ignores the other
-    chunks' rows), so only the scoring job repeats.
-
-    `max_inflight` chunk jobs run concurrently (guide §2.6 — Spark's
-    scheduler happily overlaps jobs; the next chunk's tasks back-fill
-    executors freed by the current chunk's straggler tail). The
-    co-resident working set stays bounded by max_inflight·chunk —
-    still the point of chunking — and results are byte-identical (the
-    chunks are independent and re-assembled in order). `chunk_times`
-    walls are measured per chunk under that concurrency — the realistic
-    serving-latency figure for a server that admits 2 batches at once."""
-    if not max_batch or len(queries) <= max_batch:
-        return topk(spark, index_dir, queries, k=k, **topk_kwargs)
-    import time
-    from concurrent.futures import ThreadPoolExecutor
-
-    if topk_kwargs.get("excluded_docs") is not None:
-        import warnings
-
-        warnings.warn(
-            "topk_batched(excluded_docs=...) excludes docs WITHOUT "
-            "correcting N/avgdl/df — see topk()",
-            stacklevel=2,
-        )
-    prep = _serve_prep(
-        spark, index_dir, queries,
-        filters=topk_kwargs.get("filters"),
-        not_terms=topk_kwargs.get("not_terms"),
-        k1=topk_kwargs.pop("k1", None), b=topk_kwargs.pop("b", None),
+    """`topk` served in bounded chunks of `max_batch` queries
+    (`run_chunked`); the serve-prep (doc_stats, the batch's
+    term-dictionary rows, the tombstone artifact) runs ONCE for the
+    whole batch — it is chunk-independent by construction — so only
+    the scoring job repeats per chunk. `max_batch=0` = plain topk."""
+    return IndexView.open(index_dir).topk(
+        spark, queries, k, max_batch=max_batch, chunk_times=chunk_times, **topk_kwargs
     )
-
-    def run_chunk(chunk: pd.DataFrame) -> tuple[pd.DataFrame, float]:
-        t0 = time.monotonic()
-        pdf = topk_frames(
-            spark, prep["blocks"], prep["tstats"], chunk, k=k,
-            **topk_kwargs, **prep["frame_kwargs"],
-        ).toPandas()
-        return pdf, time.monotonic() - t0
-
-    chunks = [
-        queries.iloc[i : i + max_batch]
-        for i in range(0, len(queries), max_batch)
-    ]
-    parts = []
-    with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool:
-        for pdf, dt in pool.map(run_chunk, chunks):  # order-preserving
-            parts.append(pdf)
-            if chunk_times is not None:
-                chunk_times.append(dt)
-    return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=TOPK_SCHEMA)
 
 
 def phrase_topk(
@@ -932,18 +1223,18 @@ def phrase_topk(
 ) -> DataFrame:
     """Exact-phrase top-k: each query_text is a PHRASE — its tokens must
     appear consecutively, in order, in the document. Two stages, both on
-    existing index physics (no positional postings):
+    existing index physics:
 
       1. candidates: conjunctive serving (`mode="and"`, k=0) — docs
          containing every phrase token, WITH their BM25 scores. The
          pool is bounded by the df of the phrase's rarest token, so for
          content phrases it is tiny; posting blocks outside the running
          intersection are never decoded.
-      2. verification: candidates' text fetched by file-pruned doc_id
-         point lookups (`_pruned_doc_meta` — reads only parquet files
-         whose recorded id span holds a candidate), normalized JVM-side
-         with the TOKENIZER'S OWN rule (lowercase, non-[a-z0-9] runs →
-         one space) and matched against ' t1 t2 … ' with `contains` —
+      2. verification: candidates' text fetched from the docs files
+         whose recorded id span holds a candidate
+         (`_pruned_doc_meta_pool`), normalized JVM-side with the
+         TOKENIZER'S OWN rule (lowercase, non-[a-z0-9] runs → one
+         space) and matched against ' t1 t2 … ' with `contains` —
          codegen string ops, no Python in the loop. Normalized-text
          adjacency is EXACTLY token adjacency because tokens are
          maximal [a-z0-9] runs: any separator collapses to one space.
@@ -951,61 +1242,37 @@ def phrase_topk(
     Survivors keep their conjunctive BM25 score; final rank is
     (score DESC, doc_id ASC). Scale contract: candidate count ∝ rarest
     df — a phrase of nothing but stopwords degrades toward a corpus
-    scan (same caveat class as a non-selective IVF filter); the
-    escalation path for that shape is a positional-postings sidecar,
-    not doc verification. Phrase-shaped matching the reference exposes
-    only as un-indexed ILIKE substring predicates over titles/names
+    scan; the escalation path for that shape is the positional sidecar.
+    Phrase-shaped matching the reference exposes only as un-indexed
+    ILIKE substring predicates over titles/names
     (/root/reference/streamlit_app.py:220-231).
 
     `positions_dir` (a `positions.build_positions` sidecar) switches
     stage 2 to POSITIONAL verification: adjacency is checked from the
     stored per-term occurrence positions — term-pruned columnar reads,
-    zero doc-text fetch — which is the scale path for common-token
-    phrases where the AND candidate set is large. Results are
-    bitwise-identical to doc-text verification (same tokenizer
-    produced both artifacts; parity is test-locked). With
-    `snippet_pad`, snippets are then computed from text fetched for
-    the FINAL k·Q rows only — the cheapest possible text touch.
+    zero doc-text fetch. Results are bitwise-identical to doc-text
+    verification (same tokenizer produced both artifacts; parity is
+    test-locked). With `snippet_pad`, snippets are then computed from
+    text fetched for the FINAL k·Q rows only.
 
-    Scale contract (the k=0 pool): the candidate set stays DISTRIBUTED
-    end to end — it is never localized through the driver (for a
-    common-token phrase it is a corpus fraction; the driver only ever
-    sees the final k·Q rows, or the bounded coarse-bucket aggregate
-    the doc-text path's file pruning needs — see _pruned_doc_meta_pool)."""
-    cand = topk(
-        spark, index_dir, queries, k=0, mode="and", filters=filters,
-        rank=False,
+    The k=0 pool stays DISTRIBUTED end to end — the driver only ever
+    sees the final k·Q rows, or the bounded coarse-bucket aggregate the
+    doc-text path's file pruning needs."""
+    view = IndexView.open(index_dir, docs_dir, positions_dir)
+    return view.phrase_topk(
+        spark, queries, k, filters=filters, text_col=text_col, snippet_pad=snippet_pad
     )
-    if positions_dir is not None:
-        from theoremsearch_spark.positions import phrase_verify_positional
 
-        # single consumer: the pool flows straight into the verify
-        # join as a plan subtree — no materialization anywhere
-        ranked = phrase_verify_positional(
-            spark, positions_dir, cand, queries, k
-        )
-        if snippet_pad is None:
-            return ranked
-        ranked = _localize_hits(spark, ranked)  # final k·Q rows — tiny
-        docs = _pruned_doc_meta(spark, docs_dir, ranked, [text_col])
-        needles = [
+
+def _needles(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
+    """(query_id, ' t1 t2 … ') — each phrase in the normalized-text
+    form `_norm_sql` produces."""
+    return spark.createDataFrame(
+        [
             (int(qid), " " + " ".join(tokenize(str(txt))) + " ")
             for qid, txt in zip(queries["query_id"], queries["query_text"])
-        ]
-        ndf = spark.createDataFrame(needles, "query_id int, needle string")
-        return (
-            ranked.join(docs, "doc_id")
-            .join(F.broadcast(ndf), "query_id")
-            .withColumn("snippet", _snippet_expr(text_col, snippet_pad))
-            .select("query_id", "rank", "doc_id", "score", "snippet")
-        )
-    # two consumers (file pruning + verify join): one EXECUTOR-side
-    # materialization so the scoring pipeline runs once. Lazy: the
-    # pruning aggregate triggers it, so checkpointing adds no extra job
-    cand = cand.localCheckpoint(eager=False)
-    docs = _pruned_doc_meta_pool(spark, docs_dir, cand, [text_col])
-    return _verify_phrase(
-        spark, cand, docs, queries, k, text_col, snippet_pad=snippet_pad
+        ],
+        "query_id int, needle string",
     )
 
 
@@ -1024,16 +1291,11 @@ def _verify_phrase(
     (score DESC, doc_id ASC). `snippet_pad` adds a `snippet` column:
     the normalized text window of ±pad chars around the FIRST phrase
     occurrence (locate + substring — still pure codegen)."""
-    needles = [
-        (int(qid), " " + " ".join(tokenize(str(txt))) + " ")
-        for qid, txt in zip(queries["query_id"], queries["query_text"])
-    ]
-    ndf = spark.createDataFrame(needles, "query_id int, needle string")
     norm = F.expr(_norm_sql(text_col))
     verified = (
         cand.select("query_id", "doc_id", "score")
         .join(docs, "doc_id")
-        .join(F.broadcast(ndf), "query_id")
+        .join(F.broadcast(_needles(spark, queries)), "query_id")
         .filter(F.contains(norm, F.col("needle")))
     )
     out_cols = ["query_id", "rank", "doc_id", "score"]
@@ -1126,58 +1388,99 @@ def _localize_hits(spark: SparkSession, hits: DataFrame) -> DataFrame:
     return spark.createDataFrame(hits.toPandas(), schema=TOPK_SCHEMA)
 
 
+
+
 def _pruned_doc_meta(
-    spark: SparkSession, docs_dir: str, hits: DataFrame, cols: list[str]
+    spark: SparkSession, docs_dirs: str | list[str], hits: DataFrame, cols: list[str]
 ) -> DataFrame:
     """Column-pruned docs scan restricted to exactly the PARQUET FILES
-    that can contain the hit ids. prepare_docs writes docs
-    doc_id-ascending and records each file's [lo, hi] id span in an
-    `_id_ranges.json` sidecar (footer stats, zero extra IO at write
-    time); the lookup binary-searches the k·Q hit ids against the
-    spans and scans only the touched files — point-lookup physics, the
-    10^12-doc answer the old global [min(hit), max(hit)] between-span
-    could not give (hits spread across the id space make that span the
-    whole table, leaving only row-group stats inside it). Dirs without
-    a manifest (docs_offset generations, hand-built roots) fall back to
-    the span filter, which is still pushed to row-group statistics. The
-    join itself does the exact id matching; AQE broadcasts the hits
-    side."""
+    that can contain the hit ids — the doc lookup for a bounded (k·Q)
+    result set. prepare_docs writes docs doc_id-ascending and records
+    each file's [lo, hi] id span in an `_id_ranges.json` sidecar (footer
+    stats, zero extra IO at write time); the lookup binary-searches the
+    hit ids against the spans and scans only the touched files —
+    point-lookup physics, where a global [min(hit), max(hit)] span
+    degenerates to the whole table once hits spread across the id
+    space. Dirs without a manifest (hand-built roots) are scanned whole,
+    bounded by the hit span pushed to row-group statistics. The join
+    itself does the exact id matching; AQE broadcasts the hits side.
+    `docs_dirs`: one docs dir or a view's list (one per generation);
+    `cols` a dir lacks are skipped."""
+    dirs = [docs_dirs] if isinstance(docs_dirs, str) else list(docs_dirs)
     ids = sorted(
         int(r["doc_id"]) for r in hits.select("doc_id").distinct().collect()
     )
-    sel = _prune_doc_files(docs_dir, ids)
-    if sel is None:
-        meta = spark.read.parquet(docs_dir).select("doc_id", *cols)
-    elif not sel:
-        # manifest present, no file can contain a hit — statically empty
+    paths: list[str] = []
+    for d in dirs:
+        ranges = _load_id_ranges(d)
+        paths.extend([d] if ranges is None or not ids else _files_hit(d, ranges, ids))
+    if not paths:
+        # manifests prove no file can contain a hit — statically empty
         # (Filter(false) folds to an empty relation: zero file reads)
-        return (
-            spark.read.parquet(docs_dir)
-            .select("doc_id", *cols)
-            .filter(F.lit(False))
-        )
-    else:
-        meta = spark.read.parquet(*sel).select("doc_id", *cols)
+        return _read_docs(spark, dirs, cols).filter(F.lit(False))
+    meta = _read_docs(spark, paths, cols)
     if ids:
         meta = meta.filter(F.col("doc_id").between(ids[0], ids[-1]))
     return meta
 
 
-def _prune_doc_files(docs_dir: str, ids: list[int]) -> list[str] | None:
-    """Files of `docs_dir` whose recorded doc_id span contains at least
-    one hit id, per the `_id_ranges.json` sidecar. None = no manifest
-    (or no ids) — caller falls back to the whole-dir scan. An empty
-    list means the manifest proves NO file holds a hit."""
+def _pruned_doc_meta_pool(
+    spark: SparkSession, docs_dirs: str | list[str], cand: DataFrame, cols: list[str]
+) -> DataFrame:
+    """Column-pruned docs scan for a DISTRIBUTED candidate pool — the
+    k=0 analog of `_pruned_doc_meta`, whose id collect is only sound
+    for bounded k·Q result sets. A conjunctive pool can be a corpus
+    fraction, so the file-pruning signal is a cluster-side aggregate:
+    distinct coarse id buckets (`_pool_hit_buckets`, bucket width ≈ one
+    file's id span). The driver sees O(n_files) ints and selects
+    exactly the files whose recorded [lo, hi] span intersects a hit
+    bucket; the bucket-bound BETWEEN filter is pushed to row-group
+    statistics inside them (dirs without a manifest are scanned whole
+    under it). When no dir has a manifest, the scan is bounded by the
+    pool's exact [min, max] (a 2-value aggregate)."""
+    dirs = [docs_dirs] if isinstance(docs_dirs, str) else list(docs_dirs)
+    ranges = [_load_id_ranges(d) for d in dirs]
+    base = _read_docs(spark, dirs, cols)
+    if all(r is None for r in ranges):
+        rng = cand.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).collect()[0]
+        if rng["lo"] is None:
+            return base.filter(F.lit(False))
+        return base.filter(F.col("doc_id").between(int(rng["lo"]), int(rng["hi"])))
+    shift = _bucket_shift([r for rs in ranges if rs for r in rs])
+    buckets = _pool_hit_buckets(cand, shift)
+    if not buckets:
+        return base.filter(F.lit(False))
+    paths = [
+        p
+        for d, rs in zip(dirs, ranges)
+        for p in ([d] if rs is None else _files_hit(d, rs, buckets, shift))
+    ]
+    if not paths:
+        return base.filter(F.lit(False))
+    return _read_docs(spark, paths, cols).filter(
+        F.col("doc_id").between(buckets[0] << shift, ((buckets[-1] + 1) << shift) - 1)
+    )
+
+
+def _read_docs(spark: SparkSession, paths: list[str], cols: list[str]) -> DataFrame:
+    docs = spark.read.parquet(*paths)
+    return docs.select("doc_id", *[c for c in cols if c in docs.columns])
+
+
+def _files_hit(docs_dir: str, ranges: list[dict], keys: list[int], shift: int = 0) -> list[str]:
+    """Files of `docs_dir` whose recorded doc_id span, shifted right by
+    `shift` (coarse buckets), contains at least one of the sorted
+    `keys`."""
     import bisect
     import os
 
-    ranges = _load_id_ranges(docs_dir)
-    if not ids or ranges is None:
-        return None
     return [
         os.path.join(docs_dir, r["file"])
         for r in ranges
-        if (i := bisect.bisect_left(ids, r["lo"])) < len(ids) and ids[i] <= r["hi"]
+        if (i := bisect.bisect_left(keys, int(r["lo"]) >> shift)) < len(keys)
+        and keys[i] <= int(r["hi"]) >> shift
     ]
 
 
@@ -1217,52 +1520,4 @@ def _pool_hit_buckets(cand: DataFrame, shift: int) -> list[int]:
         for r in cand.select(F.shiftright("doc_id", shift).alias("cb"))
         .distinct()
         .collect()
-    )
-
-
-def _pruned_doc_meta_pool(
-    spark: SparkSession, docs_dir: str, cand: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Column-pruned docs scan for a DISTRIBUTED candidate pool —
-    the k=0 analog of `_pruned_doc_meta`, which collects hit ids and is
-    only sound for bounded k·Q result sets. A conjunctive pool can be a
-    corpus fraction, so the file-pruning signal here is a cluster-side
-    aggregate: distinct coarse id buckets (`_pool_hit_buckets`, bucket
-    width ≈ one file's id span). The driver sees O(n_files) ints and
-    selects exactly the files whose recorded [lo, hi] span intersects a
-    hit bucket; the bucket-bound BETWEEN filter is pushed to row-group
-    statistics inside them. No manifest → whole-dir scan bounded by the
-    pool's exact [min, max] (a 2-value aggregate)."""
-    ranges = _load_id_ranges(docs_dir)
-    base = spark.read.parquet(docs_dir).select("doc_id", *cols)
-    if ranges is None:
-        rng = cand.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        if rng["lo"] is None:
-            return base.filter(F.lit(False))
-        return base.filter(F.col("doc_id").between(int(rng["lo"]), int(rng["hi"])))
-    shift = _bucket_shift(ranges)
-    buckets = _pool_hit_buckets(cand, shift)
-    if not buckets:
-        return base.filter(F.lit(False))
-    import bisect
-    import os
-
-    sel = [
-        os.path.join(docs_dir, r["file"])
-        for r in ranges
-        if (i := bisect.bisect_left(buckets, int(r["lo"]) >> shift)) < len(buckets)
-        and buckets[i] <= int(r["hi"]) >> shift
-    ]
-    if not sel:
-        return base.filter(F.lit(False))
-    return (
-        spark.read.parquet(*sel)
-        .select("doc_id", *cols)
-        .filter(
-            F.col("doc_id").between(
-                buckets[0] << shift, ((buckets[-1] + 1) << shift) - 1
-            )
-        )
     )

@@ -1,15 +1,15 @@
-"""Capture `.explain("formatted")` plans for the round-6 optimization
-deliverables (plans/r06/<query>_{before,after}.txt).
+"""Capture `.explain("formatted")` plans of the serving paths as
+before/after receipts (plans/<change>/<query>_{before,after}.txt).
 
 Usage: python tools/capture_plans.py <out_dir> <suffix>
-  e.g. python tools/capture_plans.py plans/r06 after
-(run it from a worktree at the round-start commit for `before`).
+  e.g. python tools/capture_plans.py plans/<change> after
+(run the same script from a checkout of the parent commit for `before`).
 
-Covers every query path the optimization round touched: the phrase /
-facet pool paths, single-index and chunked BM25 serving, upsert
-(multi-generation) serving, and IVF ANN serving. Fixtures come from
-the driver harness (`_ensure_index` etc. over sf0.001) plus a small
-synthetic ANN index, so plans are cheap to produce and deterministic.
+Covers the phrase / facet pool paths, single-index and chunked BM25
+serving, upsert (multi-generation) serving, and IVF ANN serving.
+Fixtures come from the driver harness (`_ensure_index` etc. over
+sf0.001) plus a small synthetic ANN index, so plans are cheap to
+produce and deterministic.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ def main() -> int:
 
     from theoremsearch_spark.session import get_spark
 
-    spark = get_spark("plans_r06", cores=8, shuffle_partitions=8)
+    spark = get_spark("capture_plans", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from theoremsearch_spark.operators import engine_queries as EQ
@@ -56,22 +56,10 @@ def main() -> int:
     # bench-shaped chunked serving (one chunk's plan is what repeats)
     idx = EQ._ensure_index(spark, sf_dir)
     qs = pd.DataFrame(EQ.HARNESS_QUERIES, columns=["query_id", "query_text"])
-    try:
-        from theoremsearch_spark.query import _serve_prep, topk_frames
+    from theoremsearch_spark.query import IndexView, topk_frames
 
-        prep = _serve_prep(spark, idx, qs)
-        grab(
-            "topk_chunk",
-            topk_frames(
-                spark, prep["blocks"], prep["tstats"], qs.iloc[:2], k=10,
-                **prep["frame_kwargs"],
-            ),
-        )
-    except ImportError:
-        # round-start tree has no _serve_prep — a chunk was a full topk()
-        from theoremsearch_spark.query import topk
-
-        grab("topk_chunk", topk(spark, idx, qs.iloc[:2], k=10))
+    prep = IndexView.open(idx).prepare(spark, qs)
+    grab("topk_chunk", topk_frames(spark, prep, qs.iloc[:2], k=10))
 
     # IVF ANN serving over a small persisted index
     from theoremsearch_spark.corpus import generate_vectors
