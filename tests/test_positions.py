@@ -133,3 +133,21 @@ def test_positional_snippets_match_text_path(spark, index_dir, oracle, positions
     )
     assert len(a) > 0
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_footer_row_count_never_reports_zero_off_local_fs(spark, positions_dir, tmp_path):
+    """The footer walk reads the Spark count from a plain path; a
+    `file://` URI (which `os.walk` cannot list) returns None so
+    build_positions counts through Spark, never a silent 0. A local dir
+    with no part files is a true 0."""
+    import os
+
+    from theoremsearch_spark.positions import _footer_row_count
+
+    want = spark.read.parquet(positions_dir).count()
+    assert want > 0
+    assert _footer_row_count(positions_dir) == want
+    uri = "file://" + os.path.abspath(positions_dir)
+    assert _footer_row_count(uri) is None
+    assert spark.read.parquet(uri).count() == want  # build_positions' fallback
+    assert _footer_row_count(str(tmp_path)) == 0

@@ -508,25 +508,3 @@ def test_corrupt_never_raises():
     assert decode_webp_lossless(b"RIFF\x00\x00\x00\x00WEBPVP8L") is None
     assert decode_webp_lossless(b"garbage") is None
 
-
-def test_decode_image_and_resize_integration(spark):
-    """decode_image returns VP8L pixels; resize re-emits as PNG."""
-    import pandas as pd
-
-    from theoremsearch_spark.functions.multimodal import (
-        decode_image,
-        decode_png_pixels,
-        resize_stub,
-    )
-
-    px = _rand_px(20, 30, seed=21)
-    raw = encode_vp8l(px, 30, 20)
-    fmt, w, h, flat, c = decode_image(raw)
-    assert (fmt, w, h, c) == ("webp", 30, 20, 3)
-    assert np.array_equal(
-        flat.reshape(20, 30, 3), px.reshape(20, 30, 4)[:, :, 1:4]
-    )
-    df = spark.createDataFrame(pd.DataFrame({"media_id": [1], "payload": [raw]}))
-    out = resize_stub(df, max_side=10).toPandas()
-    rpx, rc = decode_png_pixels(bytes(out["payload"].iloc[0]))
-    assert rc == 3 and rpx.size == 7 * 10 * 3  # stride-3 downsample

@@ -1,8 +1,7 @@
 """VP8L (lossless WEBP) decoder — pure numpy + stdlib.
 
-Closes the "WEBP pixels" gap the way `jpegcodec.py` closed JPEG: the
-container ships no PIL, so the format is implemented from the public
-bitstream spec (https://developers.google.com/speed/webp/docs/
+Implemented from the public bitstream spec, with no PIL dependency
+(https://developers.google.com/speed/webp/docs/
 webp_lossless_bitstream_specification):
 
   decode  full VP8L: canonical prefix codes (simple 1-2-symbol and
@@ -14,15 +13,16 @@ webp_lossless_bitstream_specification):
           (per-tile cross-channel deltas), SUBTRACT-GREEN, and
           COLOR-INDEXING (palette, including the sub-byte pixel
           BUNDLING used for palettes ≤ 16). Corrupt/overlong streams
-          return None, never raise (the decode_png_pixels contract).
+          return None, never raise.
 
-Lossy VP8 stays dims-only (`parse_webp_dims`): a full VP8 intra
-decoder (boolean arithmetic coder + prediction + loop filter) is not
-a reasonable stdlib build and has no ground truth in this container.
+Lossy VP8 is not decoded (its dims come from `parse_webp_dims`): a
+full VP8 intra decoder (boolean arithmetic coder + prediction + loop
+filter) is not a reasonable stdlib build and has no ground-truth
+fixture.
 
-Like the other codecs this runs only inside the Arrow-batched media
-pipeline (`functions/multimodal.py`) — never in the index/query hot
-path.
+Standalone: the media pipeline (`functions/multimodal.py`) does not
+call it — `decode_image` reports WEBP format and dims from the header
+only, like every other real image format.
 """
 
 from __future__ import annotations
@@ -65,8 +65,8 @@ class _Bits:
 
 class _Prefix:
     """Canonical prefix decoder from code lengths — decode() walks a
-    {(len, code): sym} map exactly like jpegcodec's Huffman reader but
-    LSB-first (VP8L reverses the bits of each code)."""
+    {(len, code): sym} map like a JPEG Huffman reader, but LSB-first
+    (VP8L reverses the bits of each code)."""
 
     __slots__ = ("table", "max_len", "single")
 

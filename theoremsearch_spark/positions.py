@@ -146,16 +146,23 @@ def build_positions(
     # read.parquet(...).count() launched a full extra scan of the
     # sidecar (∝ corpus: 4.4 M rows at sf0.1) just to report a number
     n = _footer_row_count(f"{out_dir}/positions")
+    if n is None:
+        n = docs.sparkSession.read.parquet(f"{out_dir}/positions").count()
     return {"position_rows": int(n), "buckets": int(n_buckets)}
 
 
-def _footer_row_count(root: str) -> int:
+def _footer_row_count(root: str) -> int | None:
     """Sum of parquet-footer num_rows over every data file under
-    `root` — one driver-side metadata pass, no Spark job."""
+    `root` — one driver-side metadata pass, no Spark job. None when
+    `root` is not a local directory (a `file://` URI or any non-local
+    scheme, which `os.walk` cannot list): the caller counts through
+    Spark instead of reporting 0."""
     import os
 
     import pyarrow.parquet as pq
 
+    if not os.path.isdir(root):
+        return None
     total = 0
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
